@@ -1,7 +1,12 @@
 package graft.streaming
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.util.UUID
+
 import graft.etl.{Enrich, Ndjson}
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -20,8 +25,14 @@ import org.apache.spark.sql.types.StructType
   *    model, with checkpointed exactly-once instead of Lambda at-least-once.
   *  - Per-object output routing (`transformed/{source_key}`,
   *    `glue/job.py:19`; metadata-hint bucket, `lambda/handler.ts:46-48`)
-  *    becomes `foreachBatch` partitioning by source file, under a caller-
-  *    resolved output root.
+  *    becomes, per micro-batch, ONE write partitioned by source file into a
+  *    staging directory under `outputRoot` (`_`-prefixed, so readers of the
+  *    root skip it), then a move of each partition directory, through the
+  *    Hadoop `FileSystem` API, to its caller-resolved output root.
+  *    The move is a rename when root and staging share a filesystem, and a
+  *    copy-then-delete (`FileUtil.copy`) when they do not. A batch therefore
+  *    costs one Spark job and one pass over its rows, whatever the number
+  *    of objects in it.
   *  - Fire-and-forget dispatch + job-run polling (`src/aws/
   *    lambda.service.ts:25-49`, `src/aws/glue.service.ts:53-62`) becomes a
   *    non-blocking `query.start()` whose handle registers in [[JobRegistry]]
@@ -67,6 +78,7 @@ object Pipeline {
       maxBytesPerTrigger: Option[Long] = None): StreamingQuery = {
 
     val resolve = resolveOutputRoot.getOrElse((_: String) => outputRoot)
+    val stagingTag = UUID.nameUUIDFromBytes(checkpointDir.getBytes(UTF_8))
     val reader = spark.readStream
       .schema(schema.add(Ndjson.CorruptCol, "string"))
       .option("mode", "PERMISSIVE")
@@ -88,18 +100,29 @@ object Pipeline {
     val query = in.writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val enriched = Enrich.enrich(batch.drop(Ndjson.CorruptCol))
-        // group rows by originating object; each group writes to
-        // <resolvedRoot>/transformed/<source_key> (glue/job.py:19 rule).
-        // The collect is the batch's file LIST (already driver-known to the
-        // file source), never row data.
-        val srcs = enriched.select("__src").distinct().collect().map(_.getString(0))
-        srcs.foreach { src =>
-          enriched.filter(col("__src") === src).drop("__src")
-            .write.mode("overwrite")
-            .json(s"${resolve(src)}/${Ndjson.transformedKey(src)}")
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        // named by checkpoint and batch id: a replayed batch overwrites
+        // its own residue
+        val staging = new Path(outputRoot, s"_staging-$stagingTag-$batchId")
+        Enrich.enrich(batch.drop(Ndjson.CorruptCol))
+          .write.mode("overwrite").partitionBy("__src").json(staging.toString)
+        val conf = spark.sparkContext.hadoopConfiguration
+        val fs = staging.getFileSystem(conf)
+        fs.listStatus(staging).map(_.getPath).filter(_.getName.startsWith("__src=")).foreach { dir =>
+          val src = ExternalCatalogUtils.unescapePathName(dir.getName.stripPrefix("__src="))
+          // <resolvedRoot>/transformed/<source_key> (glue/job.py:19 rule)
+          val target = new Path(resolve(src), Ndjson.transformedKey(src))
+          val targetFs = target.getFileSystem(conf)
+          targetFs.delete(target, true)
+          targetFs.mkdirs(target.getParent)
+          val moved =
+            if (targetFs.getUri == fs.getUri) fs.rename(dir, target)
+            else FileUtil.copy(fs, dir, targetFs, target, true, conf)
+          if (!moved) throw new java.io.IOException(s"could not move $dir to $target")
+          targetFs.create(new Path(target, "_SUCCESS")).close()
         }
+        fs.delete(staging, true)
+        ()
       }
       .start()
     JobRegistry.register(query)

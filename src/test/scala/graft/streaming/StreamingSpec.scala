@@ -1,10 +1,14 @@
 package graft.streaming
 
 import graft.SparkSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 
 class PipelineSpec extends SparkSpec {
 
@@ -13,6 +17,16 @@ class PipelineSpec extends SparkSpec {
 
   private val schema = StructType(Seq(
     StructField("name", StringType), StructField("id", LongType)))
+
+  /** Names in `dir`, hidden checksum files excluded. */
+  private def names(dir: Path): Set[String] =
+    scala.util.Using.resource(Files.list(dir))(
+      _.iterator.asScala.map(_.getFileName.toString).filterNot(_.startsWith(".")).toSet)
+
+  /** Sorted `id`s of every record in the part files of `dir`. */
+  private def idsIn(dir: Path): Seq[Option[Long]] =
+    spark.read.schema(schema).json(dir.toString).collect()
+      .map(r => if (r.isNullAt(1)) None else Some(r.getLong(1))).toSeq.sortBy(_.getOrElse(-1L))
 
   test("end-to-end drain: NDJSON objects land -> enriched per-object outputs") {
     val landing = tmp(); val out = tmp(); val ckpt = tmp()
@@ -48,6 +62,20 @@ class PipelineSpec extends SparkSpec {
     Pipeline.run(spark, landing, out, schema, ckpt).awaitTermination()
     assert(spark.read.json(s"$out/transformed/my batch.json").count() === 1)
     assert(spark.read.json(s"$out/transformed/a+b.json").count() === 1)
+  }
+
+  test("key round-trip: names Spark escapes in partition directories route by the DECODED key") {
+    val landing = tmp(); val out = tmp(); val ckpt = tmp()
+    // '=' and '%' are escaped in partition directory names; "p%25q=r.json"
+    // holds a literal "%25", which must be decoded exactly once
+    val keys = Seq("k=1%x.json", "p%25q=r.json", "plain.json")
+    keys.zipWithIndex.foreach { case (k, i) =>
+      Files.writeString(Paths.get(landing, k), s"""{"name":"n$i","id":$i}\n{"name":"m$i","id":${i + 10}}\n""")
+    }
+    Pipeline.run(spark, landing, out, schema, ckpt).awaitTermination()
+    keys.zipWithIndex.foreach { case (k, i) =>
+      assert(idsIn(Paths.get(out, "transformed", k)) === Seq(Some(i.toLong), Some(i + 10L)), k)
+    }
   }
 
   test("per-object routing hint: resolver directs files to different roots") {
@@ -92,6 +120,73 @@ class PipelineSpec extends SparkSpec {
     Pipeline.run(spark, landing, out, schema, ckpt).awaitTermination()
     assert(new java.io.File(s"$out/transformed/x.json").lastModified() === mtime,
       "second drain must not rewrite an already-processed object")
+  }
+
+  test("a micro-batch's drain runs the same number of Spark jobs for 2 objects as for 8") {
+    val sc = spark.sparkContext
+    // suites share the session, so count by the query id each micro-batch
+    // job carries rather than by a global delta
+    val byQuery = new ConcurrentHashMap[String, AtomicInteger]()
+    val barrier = "pipeline-spec-barrier"
+    @volatile var barrierSeen = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        props.flatMap(p => Option(p.getProperty("sql.streaming.queryId"))).foreach(id =>
+          byQuery.computeIfAbsent(id, _ => new AtomicInteger).incrementAndGet())
+        if (props.exists(_.getProperty("spark.jobGroup.id") == barrier)) barrierSeen = true
+      }
+    }
+    def drainJobs(objects: Int): Int = {
+      val landing = tmp(); val out = tmp(); val ckpt = tmp()
+      (1 to objects).foreach { i =>
+        Files.writeString(Paths.get(landing, s"o$i.json"), s"""{"name":"n$i","id":$i}\n""")
+      }
+      val q = Pipeline.run(spark, landing, out, schema, ckpt)
+      q.awaitTermination()
+      assert(q.recentProgress.count(_.numInputRows > 0) === 1)
+      // the listener sees events in order: once it sees this job, it has
+      // seen every job the drain started
+      barrierSeen = false
+      sc.setJobGroup(barrier, "listener barrier")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!barrierSeen && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(barrierSeen, "listener never saw the barrier job")
+      Option(byQuery.get(q.id.toString)).map(_.get).getOrElse(0)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val (two, eight) = (drainJobs(2), drainJobs(8))
+      assert(two > 0)
+      assert(two === eight, s"2 objects ran $two jobs, 8 objects ran $eight")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a drain leaves no staging residue: only transformed/<key> with _SUCCESS and its own records") {
+    val landing = tmp(); val out = tmp(); val ckpt = tmp()
+    Files.writeString(Paths.get(landing, "good.json"),
+      "{\"name\":\"a\",\"id\":1}\n{\"name\":\"b\",\"id\":2}\n")
+    Files.writeString(Paths.get(landing, "mixed.json"),
+      "{\"name\":\"c\",\"id\":3}\nnot json\n")
+    val keys = Seq("good.json", "mixed.json")
+    def mtimes = keys.map(k => new java.io.File(s"$out/transformed/$k").lastModified())
+    Pipeline.run(spark, landing, out, schema, ckpt).awaitTermination()
+    assert(names(Paths.get(out)) === Set("transformed"))
+    assert(names(Paths.get(out, "transformed")) === keys.toSet)
+    keys.foreach { k =>
+      val files = names(Paths.get(out, "transformed", k))
+      assert(files.contains("_SUCCESS") && (files - "_SUCCESS").forall(_.startsWith("part-")), files)
+    }
+    assert(idsIn(Paths.get(out, "transformed", "good.json")) === Seq(Some(1L), Some(2L)))
+    // the malformed line still yields one (null-id) enriched record
+    assert(idsIn(Paths.get(out, "transformed", "mixed.json")) === Seq(None, Some(3L)))
+
+    val before = mtimes
+    Thread.sleep(1100)
+    Pipeline.run(spark, landing, out, schema, ckpt).awaitTermination()
+    assert(mtimes === before, "a re-drain must not rewrite any target")
+    assert(names(Paths.get(out)) === Set("transformed"))
   }
 }
 
